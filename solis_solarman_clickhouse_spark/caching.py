@@ -12,15 +12,15 @@ Releasing is therefore the harness's job, after it has consumed the
 result. Unpersisting is always CORRECT (Spark recomputes from lineage);
 this is purely a memory-accumulation discipline.
 
-Iterative algorithms (BFS frontier rounds) additionally unpersist their
-superseded per-round state eagerly — see ``queries/graph.py`` — since
-those frames are consumed by the next round's materialization barrier
-inside the function itself.
+Iterative algorithms run their rounds through :func:`iterate`, which
+additionally releases superseded per-round states eagerly, inside the
+query function: those frames are consumed by the next rounds'
+materialization barriers before the function returns.
 """
 
 from __future__ import annotations
 
-from typing import List
+from typing import Callable, List, Optional, Tuple
 
 from pyspark.sql import DataFrame
 
@@ -37,7 +37,7 @@ def tracked_persist(df: DataFrame, level=None) -> DataFrame:
 def tracked_checkpoint(df: DataFrame) -> DataFrame:
     """``df.localCheckpoint(eager=True)`` + registration for later
     :func:`release_cached` — the iterative loops' lineage-truncating
-    barrier (see queries/graph.py). UNLIKE a persisted frame, a released
+    barrier (see :func:`iterate`). UNLIKE a persisted frame, a released
     checkpoint cannot be recomputed (its lineage is gone); the harness
     contract already guarantees release happens only AFTER the query's
     result has been consumed, which is exactly when the blocks are dead.
@@ -47,12 +47,6 @@ def tracked_checkpoint(df: DataFrame) -> DataFrame:
     out = df.localCheckpoint(eager=True)
     _TRACKED.append(out)
     return out
-
-
-def untrack(df: DataFrame) -> None:
-    """Drop a frame from the registry without unpersisting (used when a
-    query releases its own superseded state eagerly)."""
-    _TRACKED[:] = [d for d in _TRACKED if d is not df]
 
 
 def release_frame(df: DataFrame, blocking: bool = False) -> None:
@@ -89,3 +83,45 @@ def release_cached(blocking: bool = False) -> int:
         release_frame(df, blocking)
         n += 1
     return n
+
+
+def iterate(
+    state: DataFrame,
+    step: Callable[[DataFrame, int], DataFrame],
+    *,
+    rounds: int,
+    converged: Optional[Callable[[DataFrame, DataFrame], bool]] = None,
+) -> Tuple[DataFrame, DataFrame, int]:
+    """The iterative graph loops' driver: ``state = step(state, r)`` for
+    r = 1..``rounds``, stopping early after the first round for which
+    ``converged(prev, cur)`` is true. Returns ``(prev, cur, rounds_run)``.
+
+    Each round's state is an eager :func:`tracked_checkpoint`, not a
+    persist: the loops reference their state twice per round (a union or
+    fold plus a relay join), so persist-with-lineage doubles the logical
+    plan every round and each barrier re-pays its Catalyst analysis
+    (graph_kcore_full measured 1.5 s -> 28.9 s per round by round 6;
+    the BFS and CC loops carried 2 MB final plans). The checkpoint
+    truncates lineage to the materialized partitions and, being eager,
+    is also the round's materialization barrier.
+
+    A state is released (blocks dropped, registry entry removed) once the
+    state after it has landed too, i.e. two rounds after it was made: the
+    previous state stays cached, so lazy frames over it stay valid (the
+    PageRank loop's final min over its last two states), and two states
+    stay cached between rounds however many rounds run. The seed
+    ``state`` is the caller's to checkpoint; it is released like any
+    other state (a no-op if it was never persisted). ``converged`` is
+    the loop's convergence probe and may run Spark jobs; the driver's
+    own jobs are the checkpoints, one per round."""
+    prev = cur = state
+    ran = 0
+    for r in range(1, rounds + 1):
+        nxt = tracked_checkpoint(step(cur, r))
+        if prev is not cur:
+            release_frame(prev)
+            _TRACKED[:] = [d for d in _TRACKED if d is not prev]
+        prev, cur, ran = cur, nxt, r
+        if converged is not None and converged(prev, cur):
+            break
+    return prev, cur, ran

@@ -13,13 +13,12 @@ COUNT — the data never leaves the cluster (no collect of nodes/edges),
 which is what makes this shape survive 100 TB where a driver-side
 union-find cannot.
 
-The checkpoint (localCheckpoint each round) truncates the lineage so the
-iteration count doesn't nest query plans exponentially. Round states are
-TRACKED checkpoints (caching.tracked_checkpoint) and superseded rounds
-release their blocks in-loop (caching.release_frame — plain unpersist
-no-ops on checkpointed frames), the r9 discipline shared with
-queries/graph.py. In-loop exchanges are sized from the measured node
-count (session.loop_partitions) instead of the caller's shuffle conf —
+The rounds run through caching.iterate, the loop driver shared with
+queries/graph.py: a tracked localCheckpoint per round truncates the
+lineage so the iteration count doesn't nest query plans exponentially,
+and superseded round states release their blocks in-loop. In-loop
+exchanges are sized from the measured node count
+(session.loop_partitions) instead of the caller's shuffle conf —
 the first convergence probe returns the count for free. AQE stays ON
 here, unlike the affinity-graph loops: near-dup components have hot
 nodes (a 10^4-copy boilerplate doc is one giant star), so the skew-join
@@ -31,7 +30,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..caching import release_frame, tracked_checkpoint, untrack
+from ..caching import iterate, tracked_checkpoint
+
+
+def undirected(edges: DataFrame, key: str | None = None) -> DataFrame:
+    """Both orientations of a two-column edge list: the rows (a, b) and
+    (b, a) under the list's own column names (a UNION ALL, no dedup).
+    ``key`` hash-partitions the result on that column at the session's
+    shuffle-partition count (the iterative loops run under
+    session.pinned_shuffle), so each round's join on it reuses the
+    partitioning and only the round state exchanges."""
+    a, b = edges.columns
+    und = edges.unionAll(edges.select(F.col(b).alias(a), F.col(a).alias(b)))
+    if key is None:
+        return und
+    n = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return und.repartition(n, key)
 
 
 def connected_components(
@@ -44,8 +58,7 @@ def connected_components(
     from ..session import loop_partitions, pinned_shuffle
 
     spark = pairs.sparkSession
-    edges = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    edges = edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    edges = undirected(pairs.select(F.col(src).alias("u"), F.col(dst).alias("v")))
     edges = edges.distinct().transform(tracked_checkpoint)
 
     labels = (
@@ -70,34 +83,29 @@ def connected_components(
         ).collect()[0]
         return row["s"], row["n"]
 
-    prev_sum, n_nodes = probe(labels)
-    with pinned_shuffle(spark, loop_partitions(spark, (n_nodes or 0) * 8)):
-        labels = _cc_rounds(edges, labels, probe, prev_sum, max_iter)
-    return labels.select(F.col("node"), F.col("label").alias("component"))
+    last_sum, n_nodes = probe(labels)
 
-
-def _cc_rounds(edges, labels, probe, prev_sum, max_iter):
-    for _ in range(max_iter):
+    def step(labels: DataFrame, _r: int) -> DataFrame:
         neighbor_min = (
             edges.join(labels, edges["v"] == labels["node"])
             .groupBy("u")
             .agg(F.min("label").alias("nlabel"))
         )
-        prev = labels
-        labels = (
-            labels.join(neighbor_min, labels["node"] == neighbor_min["u"], "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))
-                ).alias("label"),
-            )
-            .transform(tracked_checkpoint)
+        return labels.join(
+            neighbor_min, labels["node"] == neighbor_min["u"], "left"
+        ).select(
+            "node",
+            F.least(
+                F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))
+            ).alias("label"),
         )
-        release_frame(prev)  # superseded round's blocks (consumed by the
-        untrack(prev)        # just-materialized checkpoint)
-        cur_sum, _ = probe(labels)
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    return labels
+
+    def converged(_prev: DataFrame, cur: DataFrame) -> bool:
+        nonlocal last_sum
+        cur_sum, _ = probe(cur)
+        done, last_sum = cur_sum == last_sum, cur_sum
+        return done
+
+    with pinned_shuffle(spark, loop_partitions(spark, (n_nodes or 0) * 8)):
+        _, labels, _ = iterate(labels, step, rounds=max_iter, converged=converged)
+    return labels.select(F.col("node"), F.col("label").alias("component"))

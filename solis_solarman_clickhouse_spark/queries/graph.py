@@ -13,7 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..caching import release_frame, tracked_checkpoint, tracked_persist, untrack
+from ..caching import iterate, tracked_checkpoint, tracked_persist
+from ..operators.graph import undirected
 from ..session import loop_partitions, pinned_shuffle
 
 from ..tables import footer_rows, table
@@ -110,9 +111,7 @@ def _pagerank_unrolled(spark, sf_dir):
         )
         .distinct()
     )
-    edges = pairs.select(F.col("c").alias("src"), F.col("s").alias("dst")).unionAll(
-        pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
-    )
+    edges = undirected(pairs.toDF("src", "dst"))
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("od"))
     # Every sweep walks the degree-annotated edge list — persist THAT
     # (src, dst, od) relation once, so the distinct+union+degree subtree
@@ -232,6 +231,19 @@ def _chain_edges(spark, sf_dir):
     return edges, deg
 
 
+def _degrees(und):
+    """(node, d) from the persisted undirected adjacency (s, t), persisted
+    too. The adjacency is materialized first (one count job), so the
+    window-function chain-edge build runs once per query rather than
+    again under the degree table and every later read."""
+    und.count()
+    return (
+        und.groupBy(F.col("s").alias("node"))
+        .agg(F.count(F.lit(1)).alias("d"))
+        .transform(tracked_persist)
+    )
+
+
 @query(
     "graph_triangle_count",
     category="graph",
@@ -345,9 +357,7 @@ def graph_common_neighbors(spark, sf_dir):
     exactly as doc_neardup_jaccard_capped caps hot shingles; out-degree
     here is ≤ 3 by construction."""
     edges, deg = _chain_edges(spark, sf_dir)
-    und = edges.select(F.col("u").alias("s"), F.col("v").alias("t")).unionAll(
-        edges.select(F.col("v").alias("s"), F.col("u").alias("t"))
-    )
+    und = undirected(edges.toDF("s", "t"))
     n1 = und.select(F.col("s").alias("u"), F.col("t").alias("w"))
     n2 = und.select(F.col("s").alias("v"), F.col("t").alias("w"))
     cand = (
@@ -432,41 +442,17 @@ def graph_bfs_distance(spark, sf_dir):
 
 
 def _bfs_rounds(spark, sf_dir):
-    n_loop = int(spark.conf.get("spark.sql.shuffle.partitions"))
     edges, _deg = _chain_edges(spark, sf_dir)
-    und = (
-        edges.select(F.col("u").alias("s"), F.col("v").alias("t"))
-        .unionAll(edges.select(F.col("v").alias("s"), F.col("u").alias("t")))
-        .repartition(n_loop, "s")
-        .transform(tracked_persist)
-    )
+    und = undirected(edges.toDF("s", "t"), "s").transform(tracked_persist)
     srcn = edges.agg(F.min("u").alias("node"))
-    dist = srcn.select("node", F.lit(0).alias("d"))
-    for _ in range(4):
-        nxt = (
-            und.join(
-                dist.withColumnRenamed("node", "s"), "s"
-            ).select(F.col("t").alias("node"), (F.col("d") + 1).alias("d"))
+
+    def step(dist, _r):
+        nxt = und.join(dist.withColumnRenamed("node", "s"), "s").select(
+            F.col("t").alias("node"), (F.col("d") + 1).alias("d")
         )
-        # materialize the |V|-bounded distance table each round via
-        # localCheckpoint (the _kcore_full_loop discipline): the state is
-        # referenced TWICE per round (union + join), so persist-with-
-        # lineage doubles the LOGICAL plan every round — the final plan
-        # was 2.2 MB of re-embedded chain-edges subtrees (captured in
-        # plans/r09/graph_bfs_distance_before.txt) and every barrier paid
-        # its Catalyst analysis. Checkpointing truncates lineage to the
-        # materialized partitions; eager ⇒ it is also the barrier.
-        prev = dist
-        dist = (
-            dist.unionAll(nxt)
-            .groupBy("node")
-            .agg(F.min("d").alias("d"))
-            .transform(tracked_checkpoint)
-        )
-        # round k's table is fully folded into round k+1's checkpoint —
-        # release its blocks eagerly (no-op on the never-persisted seed)
-        release_frame(prev)
-        untrack(prev)
+        return dist.unionAll(nxt).groupBy("node").agg(F.min("d").alias("d"))
+
+    _, dist, _ = iterate(srcn.select("node", F.lit(0).alias("d")), step, rounds=4)
     return dist.select("node", F.col("d").alias("dist")).orderBy("node")
 
 
@@ -531,11 +517,11 @@ def graph_kcore_onion(spark, sf_dir):
     naive alive-set + anti-join formulation references its state 4× per
     round and the unrolled plan grows 4^R: at R=3 that tree OOMed
     Catalyst plan canonicalization in a vanilla 1 GB driver before any
-    task ran (measured). Per-round state is persisted with a count
-    barrier then released once superseded. A FIXED number of rounds
-    keeps the oracle comparable: both engines run the identical unrolled
-    recursion, so the row set is EXACT whether or not the peel has
-    converged (the graph_pagerank convention). At 100 TB the loop runs
+    task ran (measured). The rounds run through caching.iterate (one
+    localCheckpoint per round, superseded states released in-loop). A
+    FIXED number of rounds keeps the oracle comparable: both engines run
+    the identical unrolled recursion, so the row set is EXACT whether or
+    not the peel has converged (the graph_pagerank convention). At 100 TB the loop runs
     to fixpoint with a per-round convergence count instead
     (operators/graph.py pattern); the per-round shuffle is one
     map-side-combinable SUM keyed by node — no anti-join cascade, no
@@ -545,30 +531,30 @@ def graph_kcore_onion(spark, sf_dir):
 
 
 def _kcore_onion_rounds(spark, sf_dir):
-    K, R = 5, 3
-    edges, _deg = _chain_edges(spark, sf_dir)
-    und = edges.select(F.col("u").alias("s"), F.col("v").alias("t")).unionAll(
-        edges.select(F.col("v").alias("s"), F.col("u").alias("t"))
-    ).transform(tracked_persist)
-    und.count()
-    # derive degrees from the cached edge list rather than re-walking the
-    # window-function edge build a second and third time (seed + final
-    # join) — chain-edges is evaluated exactly once per invocation
-    deg = (
-        und.groupBy(F.col("s").alias("node"))
-        .agg(F.count(F.lit(1)).alias("d"))
-        .transform(tracked_persist)
+    deg, seed, step = _peel(spark, sf_dir, None, k=5)
+    _, state, _ = iterate(seed, step, rounds=3)
+    return (
+        state.join(F.broadcast(deg), "node")
+        .select(F.col("node").alias("custkey"), "layer", F.col("d").alias("deg0"))
+        .orderBy("custkey")
     )
-    # localCheckpoint per round, NOT persist: the state is referenced
-    # TWICE per round (alive-degree sum + the fold), so persist-with-
-    # lineage doubles the logical plan per round and every barrier pays
-    # its Catalyst analysis (the _kcore_full_loop lesson, measured again
-    # this round on the bfs/cc twins — 2 MB final plans). Eager ⇒ the
-    # checkpoint is also the materialization barrier.
-    state = deg.select(
+
+
+def _peel(spark, sf_dir, key, k):
+    """The k-core peel shared by graph_kcore_onion and graph_kcore_full:
+    (deg, seed state, step). The state is one frame (node, a, layer); a
+    round sums the neighbors' ``a`` over the static adjacency (persisted,
+    hash-partitioned on ``key`` when given) and folds a' = a AND
+    alive_deg >= k, stamping round r as the layer of each node it
+    removes."""
+    edges, _deg = _chain_edges(spark, sf_dir)
+    und = undirected(edges.toDF("s", "t"), key).transform(tracked_persist)
+    deg = _degrees(und)
+    seed = deg.select(
         "node", F.lit(1).alias("a"), F.lit(0).alias("layer")
     ).transform(tracked_checkpoint)
-    for r in range(1, R + 1):
+
+    def step(state, r):
         nbr = (
             und.join(
                 state.select(F.col("node").alias("t"), F.col("a").alias("at")),
@@ -577,35 +563,19 @@ def _kcore_onion_rounds(spark, sf_dir):
             .groupBy("s")
             .agg(F.sum("at").alias("alive_deg"))
         )
-        prev = state
-        state = (
-            state.join(nbr.withColumnRenamed("s", "node"), "node", "left")
-            .select(
-                "node",
-                F.when(
-                    (F.col("a") == 1)
-                    & (F.coalesce(F.col("alive_deg"), F.lit(0)) >= K),
-                    F.lit(1),
-                ).otherwise(F.lit(0)).alias("a"),
-                F.when(F.col("layer") > 0, F.col("layer"))
-                .when(
-                    (F.col("a") == 1)
-                    & (F.coalesce(F.col("alive_deg"), F.lit(0)) < K),
-                    F.lit(r),
-                )
-                .otherwise(F.lit(0))
-                .alias("layer"),
-            )
-            .transform(tracked_checkpoint)
+        alive_deg = F.coalesce(F.col("alive_deg"), F.lit(0))
+        return state.join(nbr.withColumnRenamed("s", "node"), "node", "left").select(
+            "node",
+            F.when((F.col("a") == 1) & (alive_deg >= k), F.lit(1))
+            .otherwise(F.lit(0))
+            .alias("a"),
+            F.when(F.col("layer") > 0, F.col("layer"))
+            .when((F.col("a") == 1) & (alive_deg < k), F.lit(r))
+            .otherwise(F.lit(0))
+            .alias("layer"),
         )
-        release_frame(prev)
-        untrack(prev)
-    res = (
-        state.join(F.broadcast(deg), "node")
-        .select(F.col("node").alias("custkey"), "layer", F.col("d").alias("deg0"))
-        .orderBy("custkey")
-    )
-    return res
+
+    return deg, seed, step
 
 
 @query(
@@ -658,9 +628,7 @@ def graph_degree_assortativity(spark, sf_dir):
     uses HUGEINT), sign split out because Spark DIV truncates while
     DuckDB // floors."""
     edges, deg = _chain_edges(spark, sf_dir)
-    und = edges.select(F.col("u").alias("s"), F.col("v").alias("t")).unionAll(
-        edges.select(F.col("v").alias("s"), F.col("u").alias("t"))
-    )
+    und = undirected(edges.toDF("s", "t"))
     ed = (
         und.join(F.broadcast(deg.withColumnRenamed("node", "s").withColumnRenamed("d", "du")), "s")
         .join(F.broadcast(deg.withColumnRenamed("node", "t").withColumnRenamed("d", "dv")), "t")
@@ -720,68 +688,40 @@ def _cc_oracle(rounds: int = 3) -> str:
 def graph_connected_components(spark, sf_dir):
     """Min-label connected-component propagation over the customer
     affinity graph, FIXED 3-round unroll — the registry-facing twin of
-    operators/graph.py:26's fixpoint operator (the clustering step
-    behind doc_dedup_clusters / vec_dedup_clusters). Each round is
+    the fixpoint operator operators/graph.connected_components (the
+    clustering step behind doc_dedup_clusters / vec_dedup_clusters).
+    Each round is
     label(v) <- min(label(v), min over neighbors of label(u)),
-    expressed as ONE shuffle: the |V|-bounded label vector is BROADCAST
-    onto the (big) undirected edge list (edges never shuffle), the
-    relayed labels UNION the nodes' own labels, and a per-node MIN
+    expressed as one shuffle join and one aggregation: the |V|-bounded
+    label vector joins the (big) undirected edge list, which is persisted
+    once and hash-partitioned on the join key (edges never re-shuffle),
+    the relayed labels UNION the nodes' own labels, and a per-node MIN
     combines map-side before a single |V|-sized exchange closes the
-    round — the graph_pagerank shape, one stage cheaper than the
-    join+least formulation (the oracle keeps that equivalent algebra).
-    3 rounds match the kcore/pagerank unroll convention; a fixed unroll
-    keeps both engines on the IDENTICAL recursion, so rows are
-    EXACT-comparable whether or not labels have converged. Labels are
-    node ids (BIGINT min — no float anywhere); the member count per
-    surviving label is one extra |V|-sized groupBy joined back
-    broadcast-side. Each round's state is persisted (operators/
-    graph.py's checkpoint-per-round): without it the lazy broadcast of
-    round k re-executes rounds 1..k-1 from scratch — measured 170 s vs
-    seconds at sf0.1. Each round takes a count() materialization
-    barrier and then releases the superseded label frame in-loop (the
-    graph_bfs_distance discipline), so peak cache stays one |V|-sized
-    frame + the edge list rather than every round's labels coexisting
-    until harness cleanup. At 100 TB: edges persist once and are read
-    per round;
-    label state stays |V|-bounded; diameter beyond the unroll is the
-    fixpoint operator's job, not a deeper plan. In-loop joins are
-    cluster-side shuffle joins against the key-partitioned persisted
-    edge list under pinned_shuffle (the _pagerank_converged_loop
-    discipline — every in-loop F.broadcast of a state-derived frame is
-    a driver collect job, and an unpinned loop pays the caller's
-    shuffle-partition count in empty tasks per round)."""
+    round — one stage cheaper than the join+least formulation (the
+    oracle keeps that equivalent algebra). 3 rounds match the
+    kcore/pagerank unroll convention; a fixed unroll keeps both engines
+    on the IDENTICAL recursion, so rows are EXACT-comparable whether or
+    not labels have converged. Labels are node ids (BIGINT min — no
+    float anywhere); the member count per surviving label is one window
+    over the final labels. The rounds run through caching.iterate: each
+    round's state is materialized (without it round k re-executes rounds
+    1..k-1 from scratch — measured 170 s vs seconds at sf0.1) and
+    superseded label frames are released in-loop, so peak cache stays
+    two |V|-sized frames + the edge list rather than every round's
+    labels coexisting until harness cleanup. At 100 TB: edges persist
+    once and are read per round; label state stays |V|-bounded; diameter
+    beyond the unroll is the fixpoint operator's job, not a deeper plan.
+    In-loop joins run under pinned_shuffle with no F.broadcast (the
+    _pagerank_converged_loop discipline — every in-loop F.broadcast of a
+    state-derived frame is a driver collect job, and an unpinned loop
+    pays the caller's shuffle-partition count in empty tasks per
+    round)."""
     with pinned_shuffle(spark, _affinity_loop_parts(spark, sf_dir), aqe=False):
         return _cc_rounds(spark, sf_dir)
 
 
 def _cc_rounds(spark, sf_dir):
-    n_loop = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges, deg = _chain_edges(spark, sf_dir)
-    und = (
-        edges.select(F.col("u").alias("s"), F.col("v").alias("t"))
-        .unionAll(edges.select(F.col("v").alias("s"), F.col("u").alias("t")))
-        .repartition(n_loop, "t")
-        .transform(tracked_persist)
-    )
-    # localCheckpoint per round (the _kcore_full_loop discipline): the
-    # label state is referenced TWICE per round (union + relay join), so
-    # persist-with-lineage doubled the logical plan per round — the final
-    # plan was 2.1 MB of re-embedded chain-edges subtrees and every
-    # barrier re-paid its Catalyst analysis. Eager ⇒ also the barrier.
-    labels = deg.select("node", F.col("node").alias("lbl")).transform(tracked_checkpoint)
-    for _ in range(3):
-        cand = und.join(
-            labels.select(F.col("node").alias("t"), "lbl"), "t"
-        ).select(F.col("s").alias("node"), "lbl")
-        prev = labels
-        labels = (
-            labels.unionAll(cand)
-            .groupBy("node")
-            .agg(F.min("lbl").alias("lbl"))
-            .transform(tracked_checkpoint)
-        )
-        release_frame(prev)
-        untrack(prev)
+    _und, _deg, labels = _cc_labels(spark, sf_dir)
     # member counts as ONE window over the checkpointed labels — the
     # earlier groupBy+join-back needed two exchanges and, with the
     # checkpointed state carrying no size statistics, degraded to a
@@ -794,6 +734,26 @@ def _cc_rounds(spark, sf_dir):
         F.col("lbl").alias("component_r3"),
         F.count(F.lit(1)).over(W.partitionBy("lbl")).alias("members_r3"),
     )
+
+
+def _cc_labels(spark, sf_dir):
+    """The fixed 3-round min-label recursion shared by
+    graph_connected_components and graph_modularity: (und, deg, labels).
+    Each round relays the labels along the persisted adjacency
+    (hash-partitioned on the relay key t), unions the nodes' own labels
+    and keeps the min per node."""
+    edges, deg = _chain_edges(spark, sf_dir)
+    und = undirected(edges.toDF("s", "t"), "t").transform(tracked_persist)
+
+    def step(labels, _r):
+        cand = und.join(
+            labels.select(F.col("node").alias("t"), "lbl"), "t"
+        ).select(F.col("s").alias("node"), "lbl")
+        return labels.unionAll(cand).groupBy("node").agg(F.min("lbl").alias("lbl"))
+
+    seed = deg.select("node", F.col("node").alias("lbl")).transform(tracked_checkpoint)
+    _, labels, _ = iterate(seed, step, rounds=3)
+    return und, deg, labels
 
 
 def _modularity_oracle(rounds: int = 3) -> str:
@@ -872,34 +832,7 @@ def graph_modularity(spark, sf_dir):
 
 
 def _modularity_body(spark, sf_dir):
-    n_loop = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges, deg = _chain_edges(spark, sf_dir)
-    und = (
-        edges.select(F.col("u").alias("s"), F.col("v").alias("t"))
-        .unionAll(edges.select(F.col("v").alias("s"), F.col("u").alias("t")))
-        .repartition(n_loop, "t")
-        .transform(tracked_persist)
-    )
-    # localCheckpoint per round (the _kcore_full_loop discipline): the
-    # label state is referenced TWICE per round (union + relay join), so
-    # persist-with-lineage doubled the logical plan per round — the final
-    # plan was 2.1 MB of re-embedded chain-edges subtrees and every
-    # barrier re-paid its Catalyst analysis. Eager ⇒ also the barrier.
-    labels = deg.select("node", F.col("node").alias("lbl")).transform(tracked_checkpoint)
-    for _ in range(3):
-        cand = und.join(
-            labels.select(F.col("node").alias("t"), "lbl"), "t"
-        ).select(F.col("s").alias("node"), "lbl")
-        prev = labels
-        labels = (
-            labels.unionAll(cand)
-            .groupBy("node")
-            .agg(F.min("lbl").alias("lbl"))
-            .transform(tracked_checkpoint)
-        )
-        release_frame(prev)
-        untrack(prev)
-    lab = labels
+    und, deg, lab = _cc_labels(spark, sf_dir)
     m2 = und.agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("m2"))
     win = (
         und.join(lab.withColumnRenamed("node", "s")
@@ -993,10 +926,10 @@ def graph_kcore_full(spark, sf_dir):
     convergence change nothing (a is already fixed), so early-stopped
     Spark output equals the cap-round oracle EXACTLY whether the peel
     converged (measured: 9 rounds at sf0.01, 10 at sf0.1) or not.
-    Per-round plan is the kcore_onion shape (alive-degree as one
-    map-side-combinable SUM over the static adjacency, state referenced
-    once via broadcast); per-round persist + in-loop release of the
-    superseded frame keeps peak cache at one |V| state + the edge list.
+    Per-round plan is the kcore_onion peel step (alive-degree as one
+    map-side-combinable SUM over the static key-partitioned adjacency);
+    the rounds run through caching.iterate, so peak cache stays at two
+    |V| states + the edge list.
     At 100 TB nothing changes: round count is set by cascade depth, not
     data volume, and each round is one bounded shuffle."""
     K, CAP = 5, 16
@@ -1005,71 +938,19 @@ def graph_kcore_full(spark, sf_dir):
 
 
 def _kcore_full_loop(spark, sf_dir, K, CAP):
-    n_loop = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges, _deg = _chain_edges(spark, sf_dir)
     # key-partitioned persist + shuffle joins in the loop: see
     # _pagerank_converged_loop — every in-loop F.broadcast of a
     # state-derived frame is a driver collect job.
-    und = (
-        edges.select(F.col("u").alias("s"), F.col("v").alias("t"))
-        .unionAll(edges.select(F.col("v").alias("s"), F.col("u").alias("t")))
-        .repartition(n_loop, "t")
-        .transform(tracked_persist)
-    )
-    und.count()
-    deg = (
-        und.groupBy(F.col("s").alias("node"))
-        .agg(F.count(F.lit(1)).alias("d"))
-        .transform(tracked_persist)
-    )
-    # localCheckpoint per round, NOT persist: the state is referenced
-    # TWICE per round (alive-degree sum + the fold), so with persist the
-    # LOGICAL plan doubles every round and Catalyst analysis goes 2^R —
-    # measured 1.5 s -> 28.9 s per round by round 6. Checkpointing
-    # truncates lineage to the materialized partitions: flat ~0.6 s/round
-    # at sf0.01 (eager => it is also the materialization barrier).
-    state = deg.select(
-        "node", F.lit(1).alias("a"), F.lit(0).alias("layer")
-    ).transform(tracked_checkpoint)
-    alive = state.agg(F.sum("a")).collect()[0][0]
-    rounds = 0
-    for r in range(1, CAP + 1):
-        nbr = (
-            und.join(
-                state.select(F.col("node").alias("t"), F.col("a").alias("at")),
-                "t",
-            )
-            .groupBy("s")
-            .agg(F.sum("at").alias("alive_deg"))
-        )
-        prev = state
-        state = (
-            state.join(nbr.withColumnRenamed("s", "node"), "node", "left")
-            .select(
-                "node",
-                F.when(
-                    (F.col("a") == 1)
-                    & (F.coalesce(F.col("alive_deg"), F.lit(0)) >= K),
-                    F.lit(1),
-                ).otherwise(F.lit(0)).alias("a"),
-                F.when(F.col("layer") > 0, F.col("layer"))
-                .when(
-                    (F.col("a") == 1)
-                    & (F.coalesce(F.col("alive_deg"), F.lit(0)) < K),
-                    F.lit(r),
-                )
-                .otherwise(F.lit(0))
-                .alias("layer"),
-            )
-            .transform(tracked_checkpoint)
-        )
-        new_alive = state.agg(F.sum("a")).collect()[0][0]  # convergence probe
-        release_frame(prev)  # superseded checkpoint blocks
-        untrack(prev)
-        rounds = r
-        if new_alive == alive:
-            break  # monotone peel: unchanged count == unchanged vector
-        alive = new_alive
+    _deg, seed, step = _peel(spark, sf_dir, "t", K)
+    alive = seed.agg(F.sum("a")).collect()[0][0]
+
+    def converged(_prev, cur):  # one collect per round
+        nonlocal alive
+        n = cur.agg(F.sum("a")).collect()[0][0]
+        done, alive = n == alive, n
+        return done  # monotone peel: unchanged count == unchanged vector
+
+    _, state, rounds = iterate(seed, step, rounds=CAP, converged=converged)
     graph_kcore_full.last_rounds = rounds  # convergence-invariant test hook
     return state.select(
         F.col("node").alias("custkey"),
@@ -1123,16 +1004,17 @@ def graph_pagerank_converged(spark, sf_dir):
     so the orbit must become periodic — measured period ≤ 2 entered at
     round ~31-32 on both sf0.01 and sf0.1 (an exact fixpoint is the
     period-1 case). The loop therefore stops when state(t) == state(t-2)
-    (covers periods 1 and 2; one |V|-sized broadcast anti-probe per
-    round), and the CANONICAL output is the elementwise MIN of the last
-    two states — invariant under where the orbit is sampled, so the
+    (covers periods 1 and 2; one |V|-sized shuffle-join count per
+    2-round step), and the CANONICAL output is the elementwise MIN of
+    the last two states — invariant under where the orbit is sampled, so the
     early-stopped result equals the oracle's LEAST(r_cap, r_cap-1) over
     the full 48-round unroll EXACTLY; if some dataset never enters a
     short orbit, both sides just run all 48 rounds and remain equal.
-    Per-round: contributions via one broadcast of the |V| rank vector
-    onto the static adjacency + map-side-combinable SUM — the
-    graph_pagerank shape; superseded states (t-3 and older) release
-    in-loop. At 100 TB: round count is contraction-driven (damping
+    Per-round: contributions via one shuffle join of the |V| rank vector
+    against the key-partitioned static adjacency + map-side-combinable
+    SUM — the graph_pagerank shape; the rounds run through
+    caching.iterate, which releases all but the last two checkpointed
+    states in-loop. At 100 TB: round count is contraction-driven (damping
     0.85), independent of |V|; each round is one bounded shuffle."""
     CAP = 48
     with pinned_shuffle(spark, _affinity_loop_parts(spark, sf_dir), aqe=False):
@@ -1140,7 +1022,7 @@ def graph_pagerank_converged(spark, sf_dir):
 
 
 def _pagerank_converged_loop(spark, sf_dir, CAP):
-    edges, deg0 = _chain_edges(spark, sf_dir)
+    edges, _deg0 = _chain_edges(spark, sf_dir)
     # adjacency REPARTITIONED ON THE JOIN KEY once, then persisted: every
     # round's contribution join reuses this partitioning, so only the
     # |V|-sized contrib frame exchanges per round. No F.broadcast inside
@@ -1148,21 +1030,8 @@ def _pagerank_converged_loop(spark, sf_dir, CAP):
     # COLLECT job, and with 4-6 of them per 2-round step the 40-round
     # sf1.0 run spent ~70% of its 72 s on driver round-trips (measured
     # 72 s -> ~25 s after switching to cluster-side shuffle joins).
-    und = (
-        edges.select(F.col("u").alias("s"), F.col("v").alias("t"))
-        .unionAll(edges.select(F.col("v").alias("s"), F.col("u").alias("t")))
-        .repartition(int(spark.conf.get("spark.sql.shuffle.partitions")), "t")
-        .transform(tracked_persist)
-    )
-    und.count()
-    deg = (
-        und.groupBy(F.col("s").alias("node"))
-        .agg(F.count(F.lit(1)).alias("d"))
-        .transform(tracked_persist)
-    )
-    # localCheckpoint per round (see _kcore_full_loop): lineage truncation
-    # keeps round cost FLAT over the ~31-round run where persisted-but-
-    # unbroken lineage grows the analyzed plan every round.
+    und = undirected(edges.toDF("s", "t"), "t").transform(tracked_persist)
+    deg = _degrees(und)
     # The out-degree RIDES IN THE STATE (node, d, r): contributions are
     # then a projection of the state (no st⋈deg join) and the fold is one
     # co-keyed left join — each round is ONE shuffle join + ONE groupBy,
@@ -1189,6 +1058,13 @@ def _pagerank_converged_loop(spark, sf_dir, CAP):
             ).alias("r"),
         )
 
+    def settled(two_back, cur):  # period-<=2 orbit probe (shuffle join)
+        return (
+            cur.join(two_back.withColumnRenamed("r", "r_old"), "node")
+            .where(F.col("r") != F.col("r_old"))
+            .count()
+        ) == 0
+
     # Two iteration rounds per checkpoint+probe: the state is referenced
     # once per round, so the intermediate (odd) round stays a LAZY plan of
     # depth 1 on the last checkpoint — never materialized on its own —
@@ -1196,34 +1072,14 @@ def _pagerank_converged_loop(spark, sf_dir, CAP):
     # The probe compares state(t) to state(t-2), exactly the period-<=2
     # test, so probing on even t only delays detection by at most one
     # round and never changes the canonical min-of-last-two output (the
-    # final min reads state(t-1) through its lazy one-round plan).
-    hist = [state]  # checkpointed states, 2-round stride
-    mid = state
-    rounds = 0
-    while rounds < CAP:
-        mid = one_round(state)  # lazy: state(t-1)
-        if rounds + 2 <= CAP:
-            state = one_round(mid).transform(tracked_checkpoint)
-            rounds += 2
-        else:  # odd CAP tail (unreachable for even CAP)
-            state = mid.transform(tracked_checkpoint)
-            mid = hist[-1]
-            rounds += 1
-        two_back = hist[-1]
-        hist.append(state)
-        changed = (
-            state.join(two_back.withColumnRenamed("r", "r_old"), "node")
-            .where(F.col("r") != F.col("r_old"))
-            .count()
-        )  # period-<=2 orbit probe (shuffle join: no driver collect)
-        while len(hist) > 2:
-            dead = hist.pop(0)
-            release_frame(dead)  # superseded checkpoint blocks
-            untrack(dead)
-        if changed == 0:
-            break
-    graph_pagerank_converged.last_rounds = rounds
-    cur, prev = state, mid  # state(t) and lazy state(t-1)
+    # final min reads state(t-1) through its lazy one-round plan). CAP is
+    # even, so CAP // 2 steps cover the oracle's CAP rounds.
+    two_back, cur, steps = iterate(
+        state, lambda st, _r: one_round(one_round(st)),
+        rounds=CAP // 2, converged=settled,
+    )
+    graph_pagerank_converged.last_rounds = 2 * steps
+    prev = one_round(two_back)  # lazy state(t-1)
     return (
         cur.join(F.broadcast(prev.withColumnRenamed("r", "r_prev")), "node")
         .select(

@@ -584,20 +584,36 @@ def test_artifact_key_tracks_file_content(tmp_path, monkeypatch):
 def test_tracked_persists_release_fully(spark):
     """Every persist() a query takes is registered with the caching module
     and release_cached() drops them ALL: a 392-query sweep must not lean
-    on LRU eviction (round-4 verdict, 'what's wrong' #5). BFS additionally
-    releases superseded frontier rounds in-loop, so at no point do 4
-    |V|-sized distance tables coexist."""
+    on LRU eviction (round-4 verdict, 'what's wrong' #5). The iterative
+    loops additionally release superseded round states in-loop
+    (caching.iterate), so however many rounds run, at most the adjacency,
+    the degree table and the last two round states stay cached until
+    release_cached() — the k-core peel runs 6 rounds and the chain's
+    connected components 13 at this scale."""
     from solis_solarman_clickhouse_spark.caching import release_cached
+    from solis_solarman_clickhouse_spark.operators.graph import connected_components
     from solis_solarman_clickhouse_spark.queries import REGISTRY
 
     def n_cached():
         return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
 
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(12)], "doc_a long, doc_b long"
+    )
+    runs = [
+        (name, lambda name=name: REGISTRY[name].fn(spark, SF_DIR))
+        for name in (
+            "graph_bfs_distance", "graph_pagerank", "doc_curation_v3",
+            "graph_kcore_full",
+        )
+    ]
+    runs.append(("connected_components", lambda: connected_components(chain)))
     release_cached()  # other tests in the session may have left frames
     base = n_cached()
-    for name in ("graph_bfs_distance", "graph_pagerank", "doc_curation_v3"):
-        REGISTRY[name].fn(spark, SF_DIR).count()
+    for name, fn in runs:
+        fn().count()
         assert n_cached() > base, f"{name}: expected tracked persists"
+        assert n_cached() - base <= 4, f"{name}: superseded rounds left cached"
         release_cached()
         assert n_cached() == base, f"{name}: persists left after release"
 

@@ -18,18 +18,27 @@ import json
 import sys
 
 
+def per_query(rec: dict) -> dict:
+    """The record's full per-query map; exits with an error when it lacks
+    one or holds fewer rows than its ``n_queries``."""
+    q = rec.get("queries_median") or rec.get("queries")
+    if not q:
+        sys.exit("input lacks a per-query map — pass bench_full.json copies")
+    if len(q) < rec.get("n_queries", 0):
+        sys.exit(
+            f"input holds {len(q)} of {rec['n_queries']} queries — pass "
+            "bench_full.json copies, not bench.py's compact final line "
+            "(its \"queries\" map keeps only the slowest rows that fit)"
+        )
+    return q
+
+
 def main() -> int:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     show_full = "--full" in sys.argv
     a = json.load(open(args[0]))
     b = json.load(open(args[1]))
-    qa = a.get("queries_median") or a.get("queries")
-    qb = b.get("queries_median") or b.get("queries")
-    if not qa or not qb:
-        sys.exit(
-            "input lacks a per-query map — pass bench_full.json copies, "
-            "not bench.py's compact final line (it carries only slowest-10)"
-        )
+    qa, qb = per_query(a), per_query(b)
     data_ratio = b["sf"] / a["sf"]
     common = sorted(set(qa) & set(qb))
     rows = []
