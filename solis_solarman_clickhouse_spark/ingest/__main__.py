@@ -9,8 +9,6 @@ env, mirroring the reference's contract:
                          (unset → generate the synthetic fixture and batch-run it)
   INGEST_SINK_PATH       output table root            (default ./data/fact)
   INGEST_CHECKPOINT      streaming checkpoint         (default ./data/ckpt)
-  CLICKHOUSE_URL/...     optional; when CLICKHOUSE_URL is set, micro-batches
-                         ALSO post to ClickHouse over HTTP (http_sink.py)
 """
 
 from __future__ import annotations

@@ -11,8 +11,7 @@ with a Spark-native shape:
   the batch; no per-row round trips (the reference's single-row INSERTs are
   its main throughput ceiling, BASELINE.md).
 - stdlib ``urllib`` only, so the partition function ships to any executor
-  with zero extra jars/packages — unlike the JDBC path
-  (clickhouse_sink.py), which needs the driver jar on the classpath.
+  with zero extra jars/packages.
 - Retry loop per partition POST: infinite by default exactly like the
   reference (``max_retries=None``), bounded in tests. A replayed partition
   duplicates rows — same at-least-once contract as the reference; use
@@ -20,7 +19,8 @@ with a Spark-native shape:
 
 Env contract mirrors solarman.py:180-190: CLICKHOUSE_URL / CLICKHOUSE_USER
 / CLICKHOUSE_PASS / CLICKHOUSE_DB required, CLICKHOUSE_TABLE defaulting to
-``solis_solarman``.
+``solis_solarman``. :func:`create_table_ddl` generates the MergeTree table
+the sink inserts into.
 """
 
 from __future__ import annotations
@@ -38,6 +38,39 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 
 from .registers import FACT_COLUMNS
+
+#: Spark type → ClickHouse type for the fact table, mirroring
+#: tables.sql:5-32 (Float32 gauges, UInt32 counters, DateTime, and a
+#: LowCardinality dictionary-encoded key).
+_CH_TYPES = {
+    "inverter": "LowCardinality(String)",
+    "time": "DateTime",
+}
+_FLOAT32_COLS = {
+    "inverter_temperature_celsius", "inverter_efficiency_percent",
+    "dc_1_voltage", "dc_1_amps", "dc_2_voltage", "dc_2_amps",
+    "dc_3_voltage", "dc_3_amps", "dc_busbar_voltage", "ground_voltage",
+    "ac_voltage", "ac_amps", "ac_frequency", "kwh_day",
+}
+
+
+def clickhouse_type(col: str) -> str:
+    if col in _CH_TYPES:
+        return _CH_TYPES[col]
+    return "Float32" if col in _FLOAT32_COLS else "UInt32"
+
+
+def create_table_ddl(database: str = "homelab", table: str = "solis_solarman") -> str:
+    """MergeTree DDL equivalent to tables.sql:5-32: monthly partitions,
+    (inverter, time) ordering/primary key."""
+    cols = ",\n    ".join(f"`{c}` {clickhouse_type(c)}" for c in FACT_COLUMNS)
+    return (
+        f"CREATE TABLE IF NOT EXISTS {database}.{table} (\n    {cols}\n)\n"
+        "ENGINE = MergeTree\n"
+        "PARTITION BY toYYYYMM(time)\n"
+        "ORDER BY (inverter, time)\n"
+        "PRIMARY KEY (inverter, time)"
+    )
 
 
 @dataclass(frozen=True)

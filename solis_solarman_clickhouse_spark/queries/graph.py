@@ -816,9 +816,12 @@ def graph_modularity(spark, sf_dir):
     is an exact integer). Labels come from the SAME fixed 3-round
     min-label recursion as graph_connected_components (identical
     unroll in the oracle), so Q prices exactly the partition that
-    query reports. Within-community edges are one edge-list join
-    against the broadcast |V|-sized label table (counted, never
-    materialized); per-community degree mass is a labels-sized rollup;
+    query reports. Within-community edges are counted (never
+    materialized) by joining the edge list to the |V|-sized label table
+    twice: on the source, a broadcast hash join that broadcasts the
+    cached edge list, then on the target, a SortMergeJoin that shuffles
+    both sides (the sf0.001 and sf0.01 plans under get_spark());
+    per-community degree mass is a labels-sized rollup;
     the final scalar uses the half-away 1e-6 integer division over
     HUGEINT/DECIMAL(38,0) operands (m² at 1e9-edge scale is far past
     int64). In-loop joins are cluster-side shuffle joins under

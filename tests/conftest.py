@@ -1,28 +1,17 @@
-"""Shared fixtures: one SparkSession per test session, a DuckDB connection
-with the fixture tables registered, and the differential-compare helper
-mirroring the driver's check.
-
-DRIVER-FAITHFUL COMPARATOR: the external driver reads BOTH result sets
-through pandas (``spark_df.toPandas()`` / ``duckdb_con.execute(sql).df()``),
-sorts columns by name, sorts rows, and hashes cell representations. Reading
-through pandas is load-bearing: DuckDB HUGEINT/DECIMAL outputs widen to
-float64 there, so a Spark int64 column vs an uncast oracle ``SUM(...)``
-hash-mismatches on representation even when values are identical (the
-round-3 failure class). A ``fetchall()``-based compare returns HUGEINT as
-Python int and silently masks it — never go back to that path.
-"""
+"""Shared fixtures: one SparkSession per test session, a DuckDB catalog
+over the fixture tables, and the differential-compare helper mirroring the
+driver's check. The catalog, the oracle call and the comparator come from
+``oracle_compare``, shared with ``tools/sweep.py``; that module's docstring
+says why both sides are read through pandas."""
 
 from __future__ import annotations
 
-import math
 import os
 
-import duckdb
-import numpy as np
 import pytest
 
+from solis_solarman_clickhouse_spark.oracle_compare import catalog, run_oracle, verdict
 from solis_solarman_clickhouse_spark.session import get_spark
-from solis_solarman_clickhouse_spark.tables import TABLE_NAMES
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -66,45 +55,13 @@ def spark():
 
 @pytest.fixture(scope="session")
 def ducks():
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    con = catalog(SF_DIR)
     yield con
     con.close()
-
-
-# The canonicalizer is the package-shared implementation so the test
-# suite and tools/sweep.py can never fork (round-5 review finding).
-from solis_solarman_clickhouse_spark.oracle_compare import (  # noqa: E402
-    canon_pandas as _canon_pandas,
-    norm_cell as _norm_cell,
-)
-
-
-def normalize(rows: list[dict]) -> list[tuple]:
-    """Legacy helper for tests that build row dicts directly."""
-    if not rows:
-        return []
-    cols = sorted(rows[0].keys())
-    return sorted(tuple(_norm_cell(r[c]) for c in cols) for r in rows)
 
 
 def compare(spark_df, ducks, oracle_sql: str, *, name: str = "") -> None:
     """Assert the Spark result equals the DuckDB oracle result, both read
     through pandas like the driver does."""
-    spandas = spark_df.toPandas()
-    opandas = ducks.execute(oracle_sql).df()
-    assert sorted(spandas.columns) == sorted(opandas.columns), (
-        f"{name}: column names {sorted(spandas.columns)} != "
-        f"oracle {sorted(opandas.columns)}"
-    )
-    actual = _canon_pandas(spandas)
-    oracle = _canon_pandas(opandas)
-    assert len(actual) == len(oracle), (
-        f"{name}: row count {len(actual)} != oracle {len(oracle)}\n"
-        f"spark head: {actual[:3]}\noracle head: {oracle[:3]}"
-    )
-    mism = [(a, o) for a, o in zip(actual, oracle) if a != o]
-    assert not mism, f"{name}: {len(mism)} mismatched rows; first 3: {mism[:3]}"
+    bad = verdict(spark_df.toPandas(), run_oracle(ducks, oracle_sql))
+    assert bad is None, f"{name}: {bad}"

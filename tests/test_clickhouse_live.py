@@ -11,7 +11,7 @@ against a real server" risk wherever docker exists.
 Path under test: ingest/fixture.py raw registers → decode/derive →
 ingest/http_sink.py JSONEachRow POST (the reference's insert loop,
 /root/reference/solarman.py:192-225) into the MergeTree DDL generated by
-ingest/clickhouse_sink.create_table_ddl (tables.sql:5-32 parity) — then
+ingest/http_sink.create_table_ddl (tables.sql:5-32 parity) — then
 read back and count.
 """
 
@@ -58,9 +58,7 @@ pytestmark = pytest.mark.skipif(
 
 @pytest.fixture(scope="module")
 def live_table():
-    from solis_solarman_clickhouse_spark.ingest.clickhouse_sink import (
-        create_table_ddl,
-    )
+    from solis_solarman_clickhouse_spark.ingest.http_sink import create_table_ddl
 
     db = os.environ.get("CLICKHOUSE_DB", "homelab")
     _query(f"CREATE DATABASE IF NOT EXISTS {db}")

@@ -137,16 +137,11 @@ def test_sink_idempotent_replay(spark, raw):
     assert len(once) == fact.count()
 
 
-def test_clickhouse_sink_sql_surface(spark):
-    """Server-free checks of the ClickHouse sink: DDL mirrors tables.sql
-    (monthly partitioning, (inverter,time) ordering, Float32/UInt32 split),
-    insert projection preserves the reference's 26-column order, and
-    connection properties follow the reference's env-var names/defaults."""
-    from solis_solarman_clickhouse_spark.ingest.clickhouse_sink import (
-        connection_properties,
-        create_table_ddl,
-        ordered_for_insert,
-    )
+def test_clickhouse_sink_sql_surface():
+    """Server-free checks of the ClickHouse sink's DDL: it mirrors tables.sql
+    (monthly partitioning, (inverter,time) ordering, Float32/UInt32 split)
+    over the reference's 26 fact columns."""
+    from solis_solarman_clickhouse_spark.ingest.http_sink import create_table_ddl
     from solis_solarman_clickhouse_spark.ingest.registers import FACT_COLUMNS
 
     ddl = create_table_ddl()
@@ -156,16 +151,6 @@ def test_clickhouse_sink_sql_surface(spark):
     assert "`kwh_total` UInt32" in ddl
     assert "`ac_frequency` Float32" in ddl
     assert len(FACT_COLUMNS) == 26
-
-    props = connection_properties(env={})
-    assert props["url"] == "jdbc:clickhouse://localhost:8123/homelab"
-    assert props["dbtable"] == "solis_solarman"  # code default, not README's
-
-    df = spark.createDataFrame(
-        [tuple(str(i) if c == "inverter" else i for i, c in enumerate(FACT_COLUMNS))],
-        list(FACT_COLUMNS)[::-1],  # reversed input column order
-    )
-    assert ordered_for_insert(df).columns == list(FACT_COLUMNS)
 
 
 def test_graceful_stop_drains_and_preserves_sink(spark, raw):

@@ -626,10 +626,10 @@ def test_bounding_ratio_survives_wide_value_deltas(spark, tmp_path):
     on deltas of ±millions of units, far past the wrap point."""
     import datetime as dt
 
-    import duckdb
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from solis_solarman_clickhouse_spark.oracle_compare import catalog
     from solis_solarman_clickhouse_spark.queries import REGISTRY
 
     rows = {
@@ -649,10 +649,7 @@ def test_bounding_ratio_survives_wide_value_deltas(spark, tmp_path):
         {k: pa.array(v, type=pa.timestamp("us") if k == "ts" else None) for k, v in rows.items()}
     )
     pq.write_table(t, str(tmp_path / "events.parquet"))
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM read_parquet('{tmp_path}/events.parquet')"
-    )
+    con = catalog(str(tmp_path))
     spec = REGISTRY["ch_bounding_ratio"]
     from .conftest import compare
 

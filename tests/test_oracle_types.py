@@ -12,11 +12,10 @@ the driver a round later.
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
+from solis_solarman_clickhouse_spark.oracle_compare import catalog
 from solis_solarman_clickhouse_spark.queries import REGISTRY
-from solis_solarman_clickhouse_spark.tables import TABLE_NAMES
 
 from .conftest import SF_DIR
 
@@ -42,11 +41,7 @@ WITH_ORACLE = sorted(n for n, s in REGISTRY.items() if s.oracle is not None)
 
 @pytest.fixture(scope="module")
 def type_audit():
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    con = catalog(SF_DIR)
     audit = {}
     for name in WITH_ORACLE:
         rows = con.execute(f"DESCRIBE {REGISTRY[name].oracle}").fetchall()

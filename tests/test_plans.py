@@ -809,15 +809,13 @@ def test_kcore_final_state_reads_cache(spark):
     ), plan
 
 
-def test_connected_components_state_reads_cache_and_broadcasts_labels(spark):
+def test_connected_components_reads_materialized_state_without_sort_merge_join(spark):
     """graph_connected_components materializes each round's |V|-bounded
     label state (localCheckpoint since the r9 optimization round: the
     persisted-lineage form carried a 2.1 MB final plan re-embedding the
     chain-edges subtree, re-analyzed at every barrier) — the returned
-    plan must read state from the materialized rounds (checkpoint scan /
-    cache scan), must NOT re-derive the chain-edges window build, and
-    must contain no SortMergeJoin (edges never shuffle for the scatter;
-    the members join is broadcast too)."""
+    plan must read cached or checkpointed state (cache scan / checkpoint
+    scan) and must contain no SortMergeJoin."""
     df = REGISTRY["graph_connected_components"].fn(spark, SF_DIR)
     plan = _plan(df)
     assert (

@@ -1,140 +1,123 @@
 #!/usr/bin/env python
-"""Full-registry driver simulation: run every query with an oracle on a
+"""Driver simulation: run registry queries that have an oracle on a
 vanilla SparkSession and DuckDB over the same parquet, compare through
-the driver-faithful pandas path (sorted columns, sorted rows, typed cell
-tags), and print one line per query. Usage:
+the driver-faithful pandas path (``oracle_compare``: sorted columns,
+sorted rows, typed cell tags), and print one line per query. Usage:
 
-    python tools/sweep.py /root/testdata/sf0.01 [--width-sensitive]
+    python tools/sweep.py /root/testdata/sf0.01 [--only=q1,q2,...]
+        [--width-sensitive] [--shard=i/N] [--resume-log=FILE]
+        [--driver-mem=4g] [--oracle-mem=24GB] [--oracle-timeout=180]
+
+``--only`` checks just the named queries. An unknown name or flag exits 2
+before Spark starts. The exit status is 1 when any query printed MISMATCH,
+COLUMN-MISMATCH or ERROR; ORACLE-TIMEOUT is a skip, not a failure.
 
 ``--width-sensitive`` additionally compares the pandas DTYPE of every
 output column between the two engines (int32 vs int64 etc.) and prints a
 ``WIDTH`` line per divergent column — the defensive audit for an
-external comparator whose hash might be integer-width-sensitive."""
+external comparator whose hash might be integer-width-sensitive.
+
+4g driver default: 420+ queries share one JVM; the default 1g heap OOMed
+on accumulated session state ~400 queries in (vec_mmr at sf0.1). The
+periodic System.gc() below bounds the drift. At sf1.0 pass
+--driver-mem=16g (toPandas of 1M-row results plus session drift blew
+4g). ``--resume-log`` skips every query that has an OK or ORACLE-TIMEOUT
+line in a prior run's log; ``--shard=i/N`` runs only the i-th slice
+(index mod N) of the sorted selection so several processes can split one
+SF; ``--oracle-mem`` bounds each process's DuckDB. A handful of oracles
+are intentionally pairwise and intractable in DuckDB beyond the driver's
+correctness SFs (one measured 95 GB RSS at sf1.0), so the oracle is also
+interrupted past ``--oracle-timeout`` seconds (0 = unlimited).
+"""
 
 from __future__ import annotations
 
+import os
+import re
 import sys
 import time
 
-import duckdb
-from pyspark.sql import SparkSession
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# shared driver-faithful canonicalizer (same code path as tests/conftest.py)
-import sys as _sys
-_sys.path.insert(0, ".")
-from solis_solarman_clickhouse_spark.oracle_compare import canon_pandas as canon  # noqa: E402
+from solis_solarman_clickhouse_spark.oracle_compare import (  # noqa: E402
+    OracleTimeout,
+    catalog,
+    run_oracle,
+    verdict,
+)
+from solis_solarman_clickhouse_spark.queries import REGISTRY  # noqa: E402
 
 
+def _resume_done(path: str) -> set[str]:
+    # prior OK/timeout rows are skipped; prior MISMATCH/ERROR re-run (the
+    # fix being retested is the usual reason for a resume)
+    done = set()
+    with open(path) as fh:
+        for line in fh:
+            m = re.search(
+                r"(?:^|\x1b\[[0-9;]*m|\r| )([a-z_0-9]+) (OK|ORACLE-TIMEOUT)", line
+            )
+            if m:
+                done.add(m.group(1))
+    return done
 
-def main():
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    width_sensitive = "--width-sensitive" in sys.argv
+
+FLAGS = {"only", "width-sensitive", "shard", "resume-log", "driver-mem",
+         "oracle-mem", "oracle-timeout"}
+
+
+def main(argv: list[str] | None = None) -> int:
+    argv = sys.argv[1:] if argv is None else argv
+    opts = dict(a[2:].partition("=")[::2] for a in argv if a.startswith("--"))
+    args = [a for a in argv if not a.startswith("--")]
+    if set(opts) - FLAGS or len(args) > 1:
+        print(__doc__, file=sys.stderr)
+        return 2
     sf = args[0] if args else "/root/testdata/sf0.01"
-    # 4g driver default: 420+ queries share one JVM; the default 1g heap
-    # OOMed on accumulated session state ~400 queries in (vec_mmr at
-    # sf0.1, isolated-pass). Periodic System.gc() below bounds the
-    # drift. At sf1.0 pass --driver-mem=16g (toPandas of 1M-row results
-    # plus session drift blew 4g). --resume-log=FILE skips every query
-    # that already has a result line in a prior run's log.
-    # --shard=i/N runs only the i-th slice of the sorted registry (stable
-    # index mod N) so several sweep processes can split one SF between
-    # them; --oracle-mem=SIZE bounds each process's DuckDB (default 24GB)
-    # so sharded runs stay inside the box.
-    driver_mem = "4g"
-    shard_i, shard_n = 0, 1
-    oracle_mem = "24GB"
-    for a in sys.argv[1:]:
-        if a.startswith("--shard="):
-            shard_i, shard_n = (int(x) for x in a.split("=", 1)[1].split("/"))
-        if a.startswith("--oracle-mem="):
-            oracle_mem = a.split("=", 1)[1]
-    resume_done: set[str] = set()
-    for a in sys.argv[1:]:
-        if a.startswith("--driver-mem="):
-            driver_mem = a.split("=", 1)[1]
-        if a.startswith("--resume-log="):
-            import re
+    width_sensitive = "width-sensitive" in opts
+    shard_i, shard_n = (int(x) for x in opts.get("shard", "0/1").split("/"))
+    timeout_s = float(opts.get("oracle-timeout", 180))
+    names = sorted(REGISTRY)
+    if "only" in opts:
+        names = sorted(set(opts["only"].split(",")))
+        unknown = [n for n in names if n not in REGISTRY]
+        if unknown:
+            print(f"unknown query names: {', '.join(unknown)}", file=sys.stderr)
+            return 2
+    resume_done = set()
+    if "resume-log" in opts:
+        resume_done = _resume_done(opts["resume-log"])
+        print(f"# resume: skipping {len(resume_done)} finished queries", flush=True)
 
-            with open(a.split("=", 1)[1]) as fh:
-                for line in fh:
-                    # skip prior OK/timeout rows; prior MISMATCH/ERROR
-                    # re-run (the fix being retested is the usual reason
-                    # for a resume)
-                    m = re.search(
-                        r"(?:^|\x1b\[[0-9;]*m|\r| )([a-z_0-9]+) "
-                        r"(OK|ORACLE-TIMEOUT)",
-                        line,
-                    )
-                    if m:
-                        resume_done.add(m.group(1))
-            print(f"# resume: skipping {len(resume_done)} finished queries",
-                  flush=True)
+    from pyspark.sql import SparkSession
+
+    from solis_solarman_clickhouse_spark.caching import release_cached
+
+    # vanilla on purpose, like the driver's: no configs from session.py
     spark = (
         SparkSession.builder.master("local[16]")
-        .config("spark.driver.memory", driver_mem)
+        .config("spark.driver.memory", opts.get("driver-mem", "4g"))
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    sys.path.insert(0, ".")
-    from solis_solarman_clickhouse_spark.caching import release_cached
-    from solis_solarman_clickhouse_spark.queries import REGISTRY
-
-    con = duckdb.connect()
-    # bound the oracle side: a handful of oracles are intentionally
-    # pairwise (all-pairs weighted Jaccard, containment) and intractable
-    # in DuckDB beyond the driver's correctness SFs — at sf1.0 one was
-    # measured at 95 GB RSS before being killed. Cap memory and interrupt
-    # past --oracle-timeout (default 180 s; 0 = unlimited), recording
-    # ORACLE-TIMEOUT as a skip, never a fail (the Spark side still ran).
-    con.execute(f"SET memory_limit='{oracle_mem}'")
-    timeout_s = 180.0
-    for a in sys.argv[1:]:
-        if a.startswith("--oracle-timeout="):
-            timeout_s = float(a.split("=", 1)[1])
-    for t in ["region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "events", "documents", "embeddings"]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')"
-        )
-
-    import threading
-
-    class _OracleTimeout(Exception):
-        pass
-
-    def run_oracle(sql: str):
-        if not timeout_s:
-            return con.execute(sql).df()
-        timer = threading.Timer(timeout_s, con.interrupt)
-        timer.start()
-        try:
-            return con.execute(sql).df()
-        except (duckdb.InterruptException, RuntimeError) as exc:
-            if "INTERRUPT" in type(exc).__name__.upper() or "interrupt" in str(exc).lower():
-                raise _OracleTimeout() from exc
-            raise
-        finally:
-            timer.cancel()
+    con = catalog(sf, memory_limit=opts.get("oracle-mem", "24GB"))
 
     n_ok = n_bad = n_width = n_done = n_skip = 0
-    for qi, name in enumerate(sorted(REGISTRY)):
-        if qi % shard_n != shard_i:
+    for qi, name in enumerate(names):
+        if qi % shard_n != shard_i or name in resume_done:
             continue
         spec = REGISTRY[name]
-        if spec.oracle is None or name in resume_done:
+        if spec.oracle is None:
+            if "only" in opts:
+                print(f"{name} NO-ORACLE", flush=True)
             continue
         t0 = time.time()
         try:
             spdf = spec.fn(spark, sf).toPandas()
-            opdf = run_oracle(spec.oracle)
-            if sorted(spdf.columns) != sorted(opdf.columns):
-                print(
-                    f"{name} COLUMN-MISMATCH {sorted(spdf.columns)} vs "
-                    f"{sorted(opdf.columns)}", flush=True)
-                n_bad += 1
-                continue
+            opdf = run_oracle(con, spec.oracle, timeout_s)
+            bad = verdict(spdf, opdf)
             if width_sensitive:
-                for c in sorted(spdf.columns):
+                for c in sorted(set(spdf.columns) & set(opdf.columns)):
                     ds, do = str(spdf[c].dtype), str(opdf[c].dtype)
                     # datetime64[ns] (Spark toPandas) vs datetime64[us]
                     # (DuckDB .df()) is pandas RESOLUTION, not value width:
@@ -142,47 +125,38 @@ def main():
                     # ch_arg_min_max) hash-match green, and the canonical
                     # cell repr str()s both identically. Suppress so the
                     # audit's signal stays "integer width only".
-                    if ds.startswith("datetime64") and do.startswith(
-                        "datetime64"
-                    ):
+                    if ds.startswith("datetime64") and do.startswith("datetime64"):
                         continue
                     if ds != do:
-                        print(f"{name} WIDTH {c}: spark={ds} oracle={do}",
-                              flush=True)
+                        print(f"{name} WIDTH {c}: spark={ds} oracle={do}", flush=True)
                         n_width += 1
-            a = canon(spdf)
-            o = canon(opdf)
-            ok = a == o
-        except _OracleTimeout:
+        except OracleTimeout:
             print(f"{name} ORACLE-TIMEOUT after {timeout_s:.0f}s "
                   "(spark side ran; oracle skipped)", flush=True)
             n_skip += 1
             continue
-        except Exception as exc:  # noqa: BLE001
+        except Exception as exc:  # noqa: BLE001 - one bad query must not end the sweep
             print(f"{name} ERROR {type(exc).__name__}: {exc}"[:300], flush=True)
             n_bad += 1
             continue
         finally:
-            # count COMPLETED queries (the loop body above may `continue`
-            # past the ok/bad increments, so track completions separately)
             n_done += 1
             release_cached()
             if n_done % 50 == 0:
                 spark.catalog.clearCache()
                 spark._jvm.System.gc()
-        dt = time.time() - t0
-        if ok:
-            n_ok += 1
-            print(f"{name} OK {len(a)} rows {dt:.1f}s", flush=True)
-        else:
+        if bad:
             n_bad += 1
-            mism = [(x, y) for x, y in zip(a, o) if x != y][:2]
-            print(f"{name} MISMATCH {len(a)} vs {len(o)} {mism}", flush=True)
+            print(f"{name} {bad}", flush=True)
+        else:
+            n_ok += 1
+            print(f"{name} OK {len(spdf)} rows {time.time() - t0:.1f}s", flush=True)
     tail = f", {n_width} width-divergent cols" if width_sensitive else ""
     if n_skip:
         tail += f", {n_skip} oracle-timeout skips"
     print(f"SWEEP DONE sf={sf}: {n_ok} ok, {n_bad} bad{tail}", flush=True)
+    return 1 if n_bad else 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())
