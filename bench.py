@@ -35,6 +35,7 @@ import sys
 import time
 
 from solis_solarman_clickhouse_spark.caching import release_cached
+from solis_solarman_clickhouse_spark.metrics import profile
 from solis_solarman_clickhouse_spark.queries import REGISTRY
 from solis_solarman_clickhouse_spark.session import get_spark
 
@@ -228,6 +229,7 @@ def main() -> None:
         if only else HEADLINE
     timings: dict[str, float] = {}
     all_runs: dict[str, list[float]] = {}
+    profiles: dict[str, dict] = {}
     errors: dict[str, str] = {}
     for name in headline:
         # Per-query fault isolation: one broken query must cost only its own
@@ -235,11 +237,14 @@ def main() -> None:
         best = float("inf")
         samples: list[float] = []
         try:
-            for _ in range(runs):
-                t0 = time.perf_counter()
-                REGISTRY[name].fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-                samples.append(round(time.perf_counter() - t0, 3))
-                best = min(best, samples[-1])
+            # The row's jobs, stages and tasks over all N runs, read from
+            # the status store after the last one (outside the timed region).
+            with profile(spark, name) as profiles[name]:
+                for _ in range(runs):
+                    t0 = time.perf_counter()
+                    REGISTRY[name].fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
+                    samples.append(round(time.perf_counter() - t0, 3))
+                    best = min(best, samples[-1])
         except Exception as exc:  # noqa: BLE001
             errors[name] = f"{type(exc).__name__}: {exc}"[:300]
             print(f"# {name}: ERROR {errors[name]}", file=sys.stderr)
@@ -258,7 +263,9 @@ def main() -> None:
             release_cached()
         timings[name] = round(best, 3)
         all_runs[name] = samples
-        print(f"# {name}: {timings[name]}s {samples}", file=sys.stderr)
+        prof = profiles[name]
+        print(f"# {name}: {timings[name]}s {samples} jobs={prof['jobs']} "
+              f"stages={prof['stages']} tasks={prof['tasks']}", file=sys.stderr)
 
     # Ingest throughput: raw registers -> decode -> derive -> partitioned
     # sink, end to end. The reference's envelope is ~0.33 rows/s sustained
@@ -359,10 +366,11 @@ def main() -> None:
     # The old "slowest" key was renamed to "queries"; a reader of the
     # compact line gets a truncated map and must compare its length with
     # "n_queries" — tools/scalecheck.py refuses it).
+    # The per-row profiles go to bench_full.json only, never on stdout.
     full = json.dumps(out)
     with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
                            "bench_full.json"), "w") as fh:
-        fh.write(full + "\n")
+        fh.write(json.dumps(dict(out, profile=profiles)) + "\n")
     print(f"# full: {full}", file=sys.stderr)
     if len(full) <= 1800:
         print(full)

@@ -16,6 +16,7 @@ import tempfile
 from pyspark.sql import functions as F
 
 from ..caching import tracked_checkpoint
+from ..session import scoped_conf
 from ..tables import table
 from .registry import query
 
@@ -431,9 +432,7 @@ def sink_dynamic_partition_overwrite(spark, sf_dir):
     o = table(spark, sf_dir, "orders").withColumn(
         "ym", F.date_format("o_orderdate", "yyyyMM")
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with scoped_conf(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         # REBALANCE on the partition column before a partitionBy write
         # (guide §6): without it every scan task holds rows of every
         # month, so the write fans out to tasks x months tiny files
@@ -453,8 +452,6 @@ def sink_dynamic_partition_overwrite(spark, sf_dir):
         restated.hint("rebalance", "ym").write.mode("overwrite").partitionBy(
             "ym"
         ).parquet(base)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     return (
         spark.read.parquet(base)
         .groupBy(F.col("ym").cast("string").alias("ym"))

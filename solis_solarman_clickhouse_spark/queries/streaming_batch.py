@@ -23,6 +23,7 @@ import tempfile
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import pinned_shuffle, scoped_conf
 from ..tables import table
 from .registry import query, r4, sql_dsum
 
@@ -469,11 +470,6 @@ def stream_peak_tracker_tws(spark, sf_dir):
     and the fallback path, parametrized)."""
     from ..streaming.transform_state import streaming_peak_tracker, tws_available
 
-    if tws_available():
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
     ev = (
         table(spark, sf_dir, "events")
         .groupBy("user_id", "ts")
@@ -488,15 +484,20 @@ def stream_peak_tracker_tws(spark, sf_dir):
     )
     peaks = streaming_peak_tracker(stream, key="user_id", ts="ts", value="value")
     name = "strm_tws_out"
-    q = (
-        peaks.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    rocksdb = {
+        "spark.sql.streaming.stateStore.providerClass":
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    }
+    with scoped_conf(spark, rocksdb if tws_available() else {}):
+        q = (
+            peaks.writeStream.outputMode("append")
+            .format("memory")
+            .queryName(name)
+            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
     return (
         spark.table(name)
         .groupBy("key")
@@ -1073,9 +1074,7 @@ def stream_stream_left_outer_join(spark, sf_dir):
     # ~6 batches x 200 state stores x 4 state ops of pure maintenance
     # (measured 105 s -> ~35 s at 32 partitions on identical data). Pin a
     # sane state layout for the query's lifetime, then restore.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
-    try:
+    with pinned_shuffle(spark, 32):
         q = (
             joined.writeStream.outputMode("append")
             .format("memory")
@@ -1085,8 +1084,6 @@ def stream_stream_left_outer_join(spark, sf_dir):
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return (
         spark.table(name)
         .where(F.col("p_user") != -1)

@@ -18,6 +18,7 @@ not this module. Everything set here is scale-neutral:
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -26,10 +27,25 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
-from contextlib import contextmanager
-
-
 @contextmanager
+def scoped_conf(spark: SparkSession, confs: dict[str, str]):
+    """Set ``confs`` on the session for the duration of the block, then
+    put every key back as it was, also when the block raises: its old
+    value, or unset when it had none. Library calls use this so they
+    never leave a conf changed on the caller's session."""
+    old = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def pinned_shuffle(spark: SparkSession, n: int | None = None, *, aqe: bool | None = None):
     """Pin ``spark.sql.shuffle.partitions`` to the session's actual
     parallelism for the duration of an ITERATIVE query's driver loop,
@@ -59,19 +75,11 @@ def pinned_shuffle(spark: SparkSession, n: int | None = None, *, aqe: bool | Non
     STRUCTURALLY skew-free (the affinity graph's degree ≤ 6 by
     construction) — AQE skew-splitting stays on everywhere data could
     concentrate."""
-    key = "spark.sql.shuffle.partitions"
-    akey = "spark.sql.adaptive.enabled"
-    old = spark.conf.get(key)
-    old_aqe = spark.conf.get(akey)
-    spark.conf.set(key, str(n or spark.sparkContext.defaultParallelism))
+    n = n or spark.sparkContext.defaultParallelism
+    confs = {"spark.sql.shuffle.partitions": str(n)}
     if aqe is not None:
-        spark.conf.set(akey, str(aqe).lower())
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
-        if aqe is not None:
-            spark.conf.set(akey, old_aqe)
+        confs["spark.sql.adaptive.enabled"] = str(aqe).lower()
+    return scoped_conf(spark, confs)
 
 
 #: AQE's target post-coalesce partition size; also the denominator of

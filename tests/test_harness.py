@@ -1,9 +1,12 @@
 """Bench-record tooling: bench.py's compact stdout line stays under its
-1900-char budget, and tools/scalecheck.py refuses a per-query map that
-holds fewer rows than the record's ``n_queries``."""
+1900-char budget, tools/scalecheck.py refuses a per-query map that
+holds fewer rows than the record's ``n_queries``, and the result hash
+that tools/topocheck.py and tools/stream_soak.py compare runs with is
+blind to row and column order."""
 
 from __future__ import annotations
 
+import importlib.util
 import json
 import os
 import subprocess
@@ -13,6 +16,9 @@ from bench import fit_line
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TIMINGS = {f"headline_query_{i:03d}": 1.0 + i / 100 for i in range(200)}
+#: result_hash of the rows in the test below; recorded hashes compare only
+#: while it stays byte-identical
+HASH_A = "46b9014c53bb63e291f29201837e2ca122a46299f23f8255c2f70d06399bcb1d"
 
 
 def _record(sf: float, timings: dict) -> dict:
@@ -54,3 +60,27 @@ def test_fit_line_holds_budget_even_when_base_exceeds_it():
     line = fit_line(base, TIMINGS)
     assert len(line) <= 1900
     assert json.loads(line)["metric"] == "headline_queries_total_runtime"
+
+
+def _topocheck():
+    spec = importlib.util.spec_from_file_location(
+        "topocheck", os.path.join(ROOT, "tools", "topocheck.py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_result_hash_ignores_row_and_column_order_and_rounds_floats(spark):
+    result_hash = _topocheck().result_hash
+    a = spark.createDataFrame(
+        [(1, 0.123456, "x"), (2, None, "y"), (3, -0.00001, "z")],
+        "k int, v double, s string")
+    b = spark.createDataFrame(
+        [("z", 0.0, 3), ("y", None, 2), ("x", 0.12346, 1)],
+        "s string, v double, k int")
+    c = spark.createDataFrame(
+        [(1, 0.1236, "x"), (2, None, "y"), (3, 0.0, "z")],
+        "k int, v double, s string")
+    assert result_hash(a) == result_hash(b)
+    assert result_hash(a) != result_hash(c)
+    assert result_hash(a) == (3, HASH_A)

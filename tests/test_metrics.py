@@ -1,13 +1,15 @@
 """Numeric execution-metrics checks via metrics.run_with_metrics — scale
 properties asserted from the SQLMetrics Spark maintains, complementing
-the plan-string tests in test_plans.py."""
+the plan-string tests in test_plans.py — and the per-block job/stage/task
+profile (metrics.profile) that bench.py records per row."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from solis_solarman_clickhouse_spark.metrics import run_with_metrics
+from solis_solarman_clickhouse_spark.metrics import _group_stats, profile, run_with_metrics
 from solis_solarman_clickhouse_spark.queries.registry import REGISTRY
+from solis_solarman_clickhouse_spark.session import scoped_conf
 from solis_solarman_clickhouse_spark.tables import table
 
 from .conftest import SF_DIR
@@ -76,14 +78,10 @@ def test_sorted_layout_skips_row_groups(spark, tmp_path):
     # control: with parquet filter pushdown disabled the scan must emit
     # every row and filtering happens in a post-scan Filter operator —
     # quantifying exactly what pushdown+stats save on the landing layout
-    before = spark.conf.get("spark.sql.parquet.filterPushdown")
-    try:
-        spark.conf.set("spark.sql.parquet.filterPushdown", "false")
+    with scoped_conf(spark, {"spark.sql.parquet.filterPushdown": "false"}):
         mu = run_with_metrics(
             spark.read.parquet(path).filter(F.col("inverter") == "inv3")
         )
-    finally:
-        spark.conf.set("spark.sql.parquet.filterPushdown", before)
     assert mu["scan_rows"] == n_total, mu
     assert m["scan_rows"] < mu["scan_rows"]
 
@@ -218,3 +216,36 @@ def test_partial_agg_shuffle_stays_bounded_across_scale(spark):
         m_small["shuffle_write_rows"],
         m_big["shuffle_write_rows"],
     )
+
+
+def _grouped_noop(spark):
+    (spark.range(0, 200_000, 1, 4).groupBy((F.col("id") % 7).alias("k")).count()
+     .write.mode("overwrite").format("noop").save())
+
+
+def test_profile_counts_the_jobs_tasks_and_cpu_of_its_block(spark):
+    with profile(spark, "test_profile_block") as p:
+        _grouped_noop(spark)
+    assert p["jobs"] >= 1 and p["tasks"] >= 4 and p["task_cpu_s"] > 0, p
+    assert p["stages"] >= 2, p  # the partial aggregate, then the final one
+    assert 1 <= len(p["top_stages"]) <= 6
+    assert set(p["top_stages"][0]) == {"name", "ms", "tasks"}
+
+
+def test_profile_does_not_count_jobs_after_its_block(spark):
+    with profile(spark, "test_profile_closed") as p:
+        _grouped_noop(spark)
+    assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None
+    _grouped_noop(spark)
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    again = _group_stats(spark.sparkContext, "test_profile_closed")
+    assert again["jobs"] == p["jobs"] and again["tasks"] == p["tasks"], (p, again)
+
+
+def test_profile_of_identical_blocks_reports_the_same_jobs(spark):
+    reports = []
+    for i in range(2):
+        with profile(spark, f"test_profile_twin_{i}") as p:
+            _grouped_noop(spark)
+        reports.append(p)
+    assert reports[0]["jobs"] == reports[1]["jobs"] >= 1, reports

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from solis_solarman_clickhouse_spark.queries.registry import REGISTRY
+from solis_solarman_clickhouse_spark.session import scoped_conf
 
 from .conftest import SF_DIR
 
@@ -209,19 +210,12 @@ def test_aqe_splits_skewed_join(spark):
     statically in agg_salted_skew."""
     import pyspark.sql.functions as SF
 
-    conf = spark.conf
-    keys = (
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        "spark.sql.autoBroadcastJoinThreshold",
-        "spark.sql.adaptive.autoBroadcastJoinThreshold",
-    )
-    old = {k: conf.get(k, None) for k in keys}
-    try:
-        conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "64KB")
-        conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16KB")
-        conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+    with scoped_conf(spark, {
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "64KB",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "16KB",
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
+    }):
         # 200k-row fact where 90% of rows share key 0; 100-row dim
         fact = spark.range(200_000).select(
             SF.when(SF.col("id") % 10 < 9, 0).otherwise(SF.col("id") % 100).alias("k"),
@@ -232,12 +226,6 @@ def test_aqe_splits_skewed_join(spark):
         j.collect()
         plan = j._jdf.queryExecution().executedPlan().toString()
         assert "isSkew=true" in plan or "skew=true" in plan, plan[:4000]
-    finally:
-        for k, v in old.items():
-            if v is None:
-                conf.unset(k)
-            else:
-                conf.set(k, v)
 
 
 def test_ohlc_is_pure_agg_no_window(spark):
@@ -303,23 +291,14 @@ def test_parquet_aggregate_pushdown_capability(spark):
     metadata-only-count path. Exercised with scoped confs (the engine
     default stays on V1: V2 changes nanos-timestamp and bucketed-write
     behavior, and the per-query win only matters for pure-stat queries)."""
-    before_push = spark.conf.get("spark.sql.parquet.aggregatePushdown", "false")
-    before_v1 = spark.conf.get("spark.sql.sources.useV1SourceList", None)
-    try:
-        spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-        spark.conf.set("spark.sql.sources.useV1SourceList", "")
+    with scoped_conf(spark, {"spark.sql.parquet.aggregatePushdown": "true",
+                             "spark.sql.sources.useV1SourceList": ""}):
         df = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").groupBy().count()
         plan = _plan(df)
         assert "PushedAggregation: [COUNT(*)]" in plan, plan
         assert df.collect()[0][0] == spark.read.parquet(
             f"{SF_DIR}/lineitem.parquet"
         ).count()
-    finally:
-        spark.conf.set("spark.sql.parquet.aggregatePushdown", before_push)
-        if before_v1 is None:
-            spark.conf.unset("spark.sql.sources.useV1SourceList")
-        else:
-            spark.conf.set("spark.sql.sources.useV1SourceList", before_v1)
 
 
 def test_dynamic_partition_pruning_on_landing_table(spark, tmp_path):
@@ -344,17 +323,11 @@ def test_dynamic_partition_pruning_on_landing_table(spark, tmp_path):
         [(r["ym"], f"label{i}") for i, r in enumerate(months)], ["ym", "label"]
     ).filter(F.col("label") == "label0")
 
-    before = spark.conf.get("spark.sql.optimizer.dynamicPartitionPruning.enabled")
-    try:
-        spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.enabled", "true")
+    with scoped_conf(spark, {"spark.sql.optimizer.dynamicPartitionPruning.enabled": "true"}):
         j = fact.join(dim, "ym").groupBy("ym").count()
         plan = _plan(j)
         assert "dynamicpruning" in plan.lower(), plan
         assert j.count() >= 1
-    finally:
-        spark.conf.set(
-            "spark.sql.optimizer.dynamicPartitionPruning.enabled", before
-        )
 
 
 def test_bloom_prefilter_stacks_broadcast_semi_joins(spark):
@@ -672,16 +645,14 @@ def test_bucket_pruning_on_bucketed_table(spark, tmp_path):
     # the distribution — but bucket FILTER pruning needs the bucketed
     # scan, so pin it on for the probe (restore after)
     key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
     try:
-        q = spark.table("ev_bucketed").where(F.col("user_id") == some_uid)
-        plan = _formatted(q)
-        sel = [l for l in plan.splitlines() if "SelectedBucketsCount" in l]
-        assert sel and "1 out of 8" in sel[0], plan
-        assert q.count() > 0
+        with scoped_conf(spark, {key: "false"}):
+            q = spark.table("ev_bucketed").where(F.col("user_id") == some_uid)
+            plan = _formatted(q)
+            sel = [l for l in plan.splitlines() if "SelectedBucketsCount" in l]
+            assert sel and "1 out of 8" in sel[0], plan
+            assert q.count() > 0
     finally:
-        spark.conf.set(key, prev)
         spark.sql("DROP TABLE IF EXISTS ev_bucketed")
 
 

@@ -25,9 +25,7 @@ Usage:
 from __future__ import annotations
 
 import argparse
-import hashlib
 import json
-import math
 import os
 import sys
 import threading
@@ -36,26 +34,7 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-
-def _norm(v):
-    if v is None:
-        return "N"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        r = round(v, 4)
-        return f"{0.0 if r == 0 else r:.4f}"
-    return str(v)
-
-
-def result_hash(df) -> tuple[int, str]:
-    cols = sorted(df.columns)
-    rows = sorted(tuple(_norm(r[c]) for c in cols) for r in df.collect())
-    h = hashlib.sha256()
-    for row in rows:
-        h.update("\x1f".join(row).encode())
-        h.update(b"\x1e")
-    return len(rows), h.hexdigest()
+from topocheck import result_hash  # noqa: E402  (this script's dir is on sys.path)
 
 
 def main() -> int:
